@@ -6,13 +6,13 @@ line::
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": ...,
-     "extraction": {...docs/sec...}, "scaling": {...local[8] vs local[32]...}}
+     "extraction": {...docs/sec...}, "scaling": {...local[N] vs local[4N]...}}
 
 The ``scaling`` block is the sandbox proxy for the north_rule's N→4N
 executor requirement (BASELINE.md): the SAME synthetic corpus is extracted
-in two fresh JVMs at local[8] and local[32]; efficiency =
-(rate_32 / rate_8) / 4.  Child mode (``--scaling-child``) runs one
-measurement and prints its docs/sec.
+in two fresh JVMs at local[N] and local[4N], 4N sized to the machine's
+cores (``scaling_pair``); efficiency = (rate_4N / rate_N) / 4.  Child mode
+(``--scaling-child``) runs one measurement and prints its docs/sec.
 
 The headline loop runs in fresh child JVMs (``--headline-child``), best
 per query across ``$SPARK_GRAFT_HEADLINE_JVMS`` (default 2) sessions,
@@ -134,17 +134,25 @@ def scaling_child(master: str, path: str) -> None:
     print(json.dumps({"master": master, "docs_per_sec": rate, "sec": dt}))
 
 
+def scaling_pair() -> tuple[int, int]:
+    """The N→4N pair this machine can run without oversubscribing: 4N is
+    the largest multiple of 4 within ``os.cpu_count()`` (local[1]→local[4]
+    on 4 cores, local[8]→local[32] on 32)."""
+    n = max(1, (os.cpu_count() or 4) // 4)
+    return n, 4 * n
+
+
 def run_scaling() -> dict:
     """north_rule proxy: the SAME heavy corpus (50% multi-page PDFs, so the
-    timed span is compute-dominated) extracted in fresh JVMs at three
-    parallelism levels.  Primary N→4N pair: local[2]→local[8] — 2-8 core
-    JVMs match real executor sizing (a 1000-executor cluster runs many
-    small JVMs, not one 32-thread JVM).  Secondary: local[8]→local[32],
-    which additionally absorbs the single-JVM scheduler/GC ceiling."""
+    timed span is compute-dominated) extracted in fresh JVMs at N and 4N
+    executor threads (``scaling_pair``); efficiency = (rate_4N / rate_N)
+    / 4, gated at 0.8.  A 4N above the core count would time contention,
+    not scaling."""
     import tempfile
 
     from qwen_ocr_spark.plans.session import get_spark
 
+    lo, hi = (f"local[{n}]" for n in scaling_pair())
     out = {}
     with tempfile.TemporaryDirectory() as td:
         path = f"{td}/scaling_pages"
@@ -161,65 +169,35 @@ def run_scaling() -> dict:
             line = [l for l in p.stdout.strip().splitlines() if l.startswith("{")][-1]
             return json.loads(line)
 
-        prev_rate = 0.0
-        for master in ("local[2]", "local[8]", f"local[{CPUS}]"):
-            r = run_child(master)
-            # this sandbox intermittently enters a degraded mode for a whole
-            # JVM session; a bigger config measuring SLOWER than a smaller
-            # one is that artifact — retry once in a fresh JVM
-            if r["docs_per_sec"] < prev_rate:
-                r2 = run_child(master)
-                if r2["docs_per_sec"] > r["docs_per_sec"]:
-                    r = r2
-            out[master] = r
-            prev_rate = r["docs_per_sec"]
-        # primary-pair retries: if the 2→8 efficiency looks degraded, re-run
-        # BOTH ends in fresh JVMs and keep each end's best rate — the
-        # whole-session degraded mode hits one JVM, not the workload
-        # (healthy sessions measure 0.9-1.0; the gate is 0.8).  Co-tenancy
-        # slowdowns on this VM hit sustained WINDOWS of wall-clock, so a
-        # second retry round (only if still under the gate) waits 90 s
-        # first to sample outside the window instead of inside it again.
-        def primary_eff() -> float:
-            return (out["local[8]"]["docs_per_sec"]
-                    / out["local[2]"]["docs_per_sec"]) / 4.0
+        for master in (lo, hi):
+            out[master] = run_child(master)
+        # this sandbox intermittently enters a degraded mode for a whole
+        # JVM session; if the efficiency looks degraded, re-run BOTH ends
+        # in fresh JVMs and keep each end's best rate — the degraded mode
+        # hits one JVM, not the workload (healthy sessions measure
+        # 0.9-1.0; the gate is 0.8).  Co-tenancy slowdowns on this VM hit
+        # sustained WINDOWS of wall-clock, so a second retry round (only if
+        # still under the gate) waits 90 s first to sample outside the
+        # window instead of inside it again.
+        def eff() -> float:
+            return (out[hi]["docs_per_sec"] / out[lo]["docs_per_sec"]) / 4.0
 
         for attempt in range(2):
-            if primary_eff() >= (0.90 if attempt == 0 else 0.80):
+            if eff() >= (0.90 if attempt == 0 else 0.80):
                 break
             if attempt:
                 time.sleep(90)
-            for master in ("local[2]", "local[8]"):
+            for master in (lo, hi):
                 r2 = run_child(master)
                 if r2["docs_per_sec"] > out[master]["docs_per_sec"]:
                     out[master] = r2
-        # same estimator for the secondary pair: this VM's measured
-        # memory-bandwidth ceiling for the workload is ~0.59-0.64 at 8→32
-        # (raw multiprocessing, no Spark), so a measured efficiency far
-        # below it means a degraded JVM session, not the workload — re-run
-        # BOTH ends once in fresh JVMs and keep each end's best rate,
-        # exactly as the primary pair does
-        hi = f"local[{CPUS}]"
-        eff_hi = (out[hi]["docs_per_sec"]
-                  / out["local[8]"]["docs_per_sec"]) / (int(CPUS) / 8.0)
-        if eff_hi < 0.55:
-            for master in ("local[8]", hi):
-                r2 = run_child(master)
-                if r2["docs_per_sec"] > out[master]["docs_per_sec"]:
-                    out[master] = r2
-    r2 = out["local[2]"]["docs_per_sec"]
-    r8 = out["local[8]"]["docs_per_sec"]
-    r_hi = out[f"local[{CPUS}]"]["docs_per_sec"]
-    factor = int(CPUS) / 8.0
     return {
         "docs": SCALING_DOCS,
         "profile": "heavy",
-        "rate_local2": round(r2, 2),
-        "rate_local8": round(r8, 2),
-        f"rate_local{CPUS}": round(r_hi, 2),
-        "efficiency_2_to_8": round((r8 / r2) / 4.0, 3),
-        f"efficiency_8_to_{CPUS}": round((r_hi / r8) / factor, 3),
-        "efficiency": round((r8 / r2) / 4.0, 3),
+        "pair": f"{lo}->{hi}",
+        "rate_lo": round(out[lo]["docs_per_sec"], 2),
+        "rate_hi": round(out[hi]["docs_per_sec"], 2),
+        "efficiency": round(eff(), 3),
     }
 
 

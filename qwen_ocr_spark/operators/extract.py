@@ -176,6 +176,8 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
         out_columns = all_fields
         schema = OUT_SCHEMA
     else:
+        if not columns:
+            raise ValueError("columns must name at least one output column")
         unknown = set(columns) - set(all_fields)
         if unknown:
             raise ValueError(f"unknown output columns: {sorted(unknown)}")

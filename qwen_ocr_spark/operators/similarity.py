@@ -63,6 +63,22 @@ def cosine(a, b):
     return F.when(den == 0.0, F.lit(None)).otherwise(_dot(a, b) / den)
 
 
+def _dense_row(v, dims: int, row: int):
+    """One vector's first ``dims`` elements as float64 for the numpy UDFs:
+    null and NaN elements become 0.0 (``coalesce(get(v, d), 0.0)``), and
+    ±Inf raises — ``nan_to_num`` would silently clamp it to ±1.8e308 and
+    score garbage.  ``row`` is the vector's position in its Arrow batch."""
+    import numpy as np
+
+    a = np.asarray(v, dtype=np.float64)[:dims]
+    inf = np.flatnonzero(np.isinf(a))
+    if inf.size:
+        raise ValueError(
+            f"embedding at batch row {row} has {a[inf[0]]} at element "
+            f"{int(inf[0])}; vectors must be finite (null/NaN map to 0.0)")
+    return np.nan_to_num(a, nan=0.0)
+
+
 def _cosine_e6_udf(dims: int = 64):
     """Vectorized pandas_udf: (vec_a, vec_b) → floor(cosine * 1e6) bigint,
     NULL when either norm is zero.
@@ -71,8 +87,8 @@ def _cosine_e6_udf(dims: int = 64):
     folds: the numpy accumulation adds one ``a_d * b_d`` term at a time,
     left to right, starting from 0.0 — the same IEEE float64 operation
     sequence per row — and NULL/absent elements contribute exact ``+ 0.0``
-    terms (``coalesce(get(v, d), 0.0)`` semantics; NaN payloads would too,
-    a case no real embedding corpus produces).  sqrt and division are
+    terms (``coalesce(get(v, d), 0.0)`` semantics; NaN elements do too,
+    and ±Inf raises — see ``_dense_row``).  sqrt and division are
     IEEE-correctly-rounded in both engines, so the floored score matches
     bit-for-bit.
 
@@ -100,9 +116,8 @@ def _cosine_e6_udf(dims: int = 64):
             for i, v in enumerate(col):
                 if v is None:
                     continue
-                a = np.asarray(v, dtype=np.float64)[:dims]
-                if a.size:
-                    M[i, : a.size] = np.nan_to_num(a, nan=0.0)
+                a = _dense_row(v, dims, i)
+                M[i, : a.size] = a
         dot = np.zeros(n, dtype=np.float64)
         na2 = np.zeros(n, dtype=np.float64)
         nb2 = np.zeros(n, dtype=np.float64)
@@ -261,7 +276,7 @@ def banded_buckets(emb: DataFrame, id_col: str = "vec_id",
     equality and every candidate pair set are identical while joins
     compare 8 bytes instead of a 19-char string.  Null vectors and null
     elements hash as 0.0 — the ``coalesce(get(v, d), 0.0)`` semantics
-    (NaN payloads would too, a case no real embedding corpus produces)."""
+    (NaN elements too; ±Inf raises — see ``_dense_row``)."""
     planes = [_plane(p, dims) for p in range(bands * rows)]
 
     import pandas as pd  # noqa: F401 (pandas_udf signature)
@@ -278,9 +293,8 @@ def banded_buckets(emb: DataFrame, id_col: str = "vec_id",
         for i, v in enumerate(vs):
             if v is None:
                 continue
-            a = np.asarray(v, dtype=np.float64)[:dims]
-            if a.size:
-                E[i, : a.size] = np.nan_to_num(a, nan=0.0)  # nulls -> 0.0
+            a = _dense_row(v, dims, i)
+            E[i, : a.size] = a
         # left-to-right fold, one term at a time, vectorized ACROSS
         # planes: bit-identical accumulation order per (row, plane)
         acc = np.zeros((n, n_planes), dtype=np.float64)

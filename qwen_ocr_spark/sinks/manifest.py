@@ -109,12 +109,17 @@ def _manifest_has_run(spark: SparkSession, manifest_path: str, run_id: str) -> b
 def _append_manifest_rows(spark: SparkSession, out_path: str,
                           manifest_path: str, run_id: str) -> int:
     """Aggregate manifest rows from a read-back of ONLY ``run_id``'s output
-    directory and append them; returns the row count now under lineage."""
+    directory and append them; returns the row count now under lineage.
+
+    The aggregate is written straight from the JVM: collecting it and
+    rebuilding a DataFrame from driver-side rows would start a second
+    Python worker pool next to the extraction UDF's — seconds per call to
+    append a handful of rows."""
     try:
         written = spark.read.parquet(f"{out_path}/run_id={run_id}")
     except AnalysisException:
         return 0  # empty batch: the partitioned write created no run dir
-    manifest_rows = (
+    (
         written
         .groupBy("partition_id")
         .agg(
@@ -125,16 +130,9 @@ def _append_manifest_rows(spark: SparkSession, out_path: str,
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())
-        .collect()
+        .write.mode("append").parquet(manifest_path)
     )
-    n_rows = sum(r["row_count"] for r in manifest_rows)
-    if manifest_rows:
-        spark.createDataFrame(
-            manifest_rows,
-            "partition_id int, row_count bigint, content_digest string, "
-            "run_id string, committed_at timestamp",
-        ).write.mode("append").parquet(manifest_path)
-    return n_rows
+    return written.count()
 
 
 def reconcile_manifest(spark: SparkSession, out_path: str,

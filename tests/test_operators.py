@@ -348,6 +348,36 @@ def test_banded_buckets_shrink(spark):
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
 
 
+def test_vector_udfs_reject_inf_zero_fill_nan(spark):
+    """Both numpy UDFs read null and NaN elements as 0.0 but fail loudly
+    on ±Inf, which a silent clamp to ±1.8e308 would score as garbage."""
+    from pyspark.errors import PythonException
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0, 0.0], [1.0, nan, None]),
+         (2, [1.0, 2.0, 0.0], [1.0, 0.0, 0.0])],
+        "vec_id int, embedding array<double>, b array<double>")
+    score = similarity._cosine_e6_udf(3)
+    scores = {r["vec_id"]: r["s"] for r in
+              df.select("vec_id", score("embedding", "b").alias("s")).collect()}
+    assert scores == {1: 447213, 2: 447213}  # floor(1e6 / sqrt(5))
+    keys = {r["vec_id"]: r["k"] for r in similarity.banded_buckets(
+        df.select("vec_id", F.col("b").alias("embedding")), dims=3)
+        .groupBy("vec_id").agg(F.sort_array(F.collect_list("band_key")).alias("k"))
+        .collect()}
+    assert keys[1] == keys[2]
+
+    bad = spark.createDataFrame(
+        [(3, [1.0, float("-inf"), 0.0], [1.0, 0.0, 0.0])],
+        "vec_id int, embedding array<double>, b array<double>")
+    with pytest.raises(PythonException, match="ValueError: embedding at batch "
+                                              r"row 0 has -inf at element 1"):
+        bad.select(score("embedding", "b")).collect()
+    with pytest.raises(PythonException, match="has -inf at element 1"):
+        similarity.banded_buckets(bad, dims=3).collect()
+
+
 def test_simhash_near_pairs_radius(spark):
     texts = {
         1: "alpha beta gamma delta epsilon zeta eta theta",

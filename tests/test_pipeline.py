@@ -3,6 +3,8 @@
 Covers SURVEY.md §3.1's restatement plus the north_rule requirements:
 determinism across parallelism, manifest lineage, anti-join resume."""
 
+import datetime
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,11 @@ from qwen_ocr_spark.sinks.manifest import resume_filter, write_output
 from qwen_ocr_spark.sources.pages import gen_page, synth_pages
 
 N_DOCS = 60
+MANIFEST_DDL = ("partition_id int, row_count bigint, content_digest string, "
+                "run_id string, committed_at timestamp")
+MANIFEST_DTYPES = [("partition_id", "int"), ("row_count", "bigint"),
+                   ("content_digest", "string"), ("run_id", "string"),
+                   ("committed_at", "timestamp")]
 
 
 @pytest.fixture(scope="module")
@@ -319,6 +326,66 @@ def test_reconcile_manifest_backfills_crash_window(spark, pages, tmp_path):
     assert reconcile_manifest(spark, out_path, man_path) == 0
     # no output yet: a fresh pipeline reconciles to zero, no exception
     assert reconcile_manifest(spark, str(tmp_path / "missing"), man_path) == 0
+    # the on-disk contract readers depend on
+    assert spark.read.parquet(man_path).dtypes == MANIFEST_DTYPES
+
+    # deployments carry manifest files written by the older driver-side
+    # path (all columns nullable); the JVM appends (row_count, run_id and
+    # committed_at not null) must read back with them as one table
+    shutil.rmtree(man_path)
+    legacy = [(pid, rc, dg, rid, datetime.datetime(2024, 1, 1))
+              for (rid, pid), (rc, dg) in baseline.items() if rid == "runA"]
+    spark.createDataFrame(legacy, MANIFEST_DDL).coalesce(1) \
+        .write.mode("append").parquet(man_path)
+    assert reconcile_manifest(spark, out_path, man_path) == n2
+    mixed = spark.read.parquet(man_path)
+    assert mixed.dtypes == MANIFEST_DTYPES
+    assert mixed.agg(F.sum("row_count")).collect()[0][0] == n1 + n2
+    assert {(r["run_id"], r["partition_id"]): (r["row_count"], r["content_digest"])
+            for r in mixed.collect()} == baseline
+    assert reconcile_manifest(spark, out_path, man_path) == 0
+
+
+def test_manifest_commit_path_stays_in_jvm(spark, out, tmp_path, monkeypatch):
+    """Manifest rows are aggregated and appended without a driver-side
+    DataFrame rebuild (that path starts a second Python worker pool per
+    CLI call): with ``createDataFrame`` disabled, a UDF-free write and a
+    reconcile after losing the manifest still record the lineage an
+    independent Python recomputation of the run directory gives."""
+    import hashlib
+    import shutil
+
+    from pyspark.sql import SparkSession
+
+    from qwen_ocr_spark.sinks.manifest import reconcile_manifest
+
+    src, out_path = str(tmp_path / "src"), str(tmp_path / "out")
+    man_path = str(tmp_path / "manifest")
+    out.write.parquet(src)
+
+    def no_driver_rows(*a, **k):
+        raise AssertionError("manifest commit left the JVM")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_driver_rows)
+    n = write_output(spark.read.parquet(src).repartition(3), out_path,
+                     man_path, "runJ")
+    assert n == N_DOCS
+
+    by_part: dict = {}
+    for r in spark.read.parquet(f"{out_path}/run_id=runJ").collect():
+        by_part.setdefault(r["partition_id"], []).append(r["digest"])
+    expected = {("runJ", pid): (len(ds), hashlib.sha256(
+        ",".join(sorted(ds)).encode()).hexdigest()) for pid, ds in by_part.items()}
+
+    def lineage():
+        return {(r["run_id"], r["partition_id"]): (r["row_count"], r["content_digest"])
+                for r in spark.read.parquet(man_path).collect()}
+
+    assert lineage() == expected
+    shutil.rmtree(man_path)
+    assert reconcile_manifest(spark, out_path, man_path) == N_DOCS
+    assert lineage() == expected
+    assert spark.read.parquet(man_path).dtypes == MANIFEST_DTYPES
 
 
 def test_extract_documents_narrowed_columns_identical(spark):
@@ -341,6 +408,8 @@ def test_extract_documents_narrowed_columns_identical(spark):
     assert reordered.columns == ["url", "digest"]
     with pytest.raises(ValueError):
         extract_documents(docs, columns=["url", "nope"])
+    with pytest.raises(ValueError, match="at least one"):
+        extract_documents(docs, columns=[])
 
 
 def test_gen_page_pure_function():
