@@ -815,15 +815,24 @@ def _lzw_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
+def _paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    if pa <= pb and pa <= pc:
+        return a
+    return b if pb <= pc else c
+
+
 def _png_unpredict(data: bytes, columns: int, colors: int = 1,
                    bpc: int = 8) -> bytes:
     """Reverse PNG row predictors (/Predictor >= 10): each row is a filter
     tag byte + ``columns*colors*bpc/8`` filtered bytes; filters 0-4
     (None/Sub/Up/Average/Paeth) are reversed against the prior row.  Used
-    post-inflate on FlateDecode/LZWDecode streams carrying /DecodeParms."""
-    from qwen_ocr_spark.functions.codecs import _paeth
-
-    rowlen = max(1, (columns * colors * bpc + 7) // 8)
+    post-inflate on FlateDecode/LZWDecode streams carrying /DecodeParms.
+    The row length comes from the PDF's untrusted /DecodeParms, so it is
+    clamped to the data: no row can extend past it, and the prior-row
+    buffer stays bounded by the stream's own size."""
+    rowlen = max(1, min((columns * colors * bpc + 7) // 8, len(data)))
     bpp = max(1, colors * bpc // 8)
     out = bytearray()
     prev = bytearray(rowlen)

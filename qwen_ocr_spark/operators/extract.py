@@ -52,6 +52,7 @@ _OUT_FIELDS = [
      "img_format string, png binary>>"),
     ("error", "string"),
 ]
+_OUT_COLUMNS = [c for c, _ in _OUT_FIELDS]
 OUT_SCHEMA = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS)
 
 FIGURES_COLUMNS = ["url", "page_number", "fig_number", "bbox", "caption",
@@ -99,29 +100,30 @@ def _extract_one(url: str, payload: bytes) -> dict:
     }
 
 
+def _extract_record(url: str, payload: bytes) -> dict:
+    """The output record of one document, less url and warc_ts.  A
+    document that fails to parse becomes an error row with null markdown."""
+    try:
+        return _extract_one(url, payload)
+    except Exception as e:  # error channel, never fail the task
+        return {
+            "doc_kind": "unknown", "markdown": None, "extracted_text": None,
+            "digest": None, "n_pages": 0, "n_headers": 0,
+            "n_blocks_kept": 0, "n_blocks_dropped": 0, "image_tokens": 0,
+            "breadcrumb": None, "figures": [],
+            "error": f"{type(e).__name__}: {e}",
+        }
+
+
 def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for b in batches:
         rows = []
         for url, ts, payload in zip(b["url"], b["warc_ts"], b["html"]):
-            try:
-                rec = _extract_one(url, bytes(payload))
-            except Exception as e:  # error channel, never fail the task
-                rec = {
-                    "doc_kind": "unknown", "markdown": None,
-                    "extracted_text": None, "digest": None, "n_pages": 0,
-                    "n_headers": 0, "n_blocks_kept": 0, "n_blocks_dropped": 0,
-                    "image_tokens": 0, "breadcrumb": None, "figures": [],
-                    "error": f"{type(e).__name__}: {e}",
-                }
+            rec = _extract_record(url, bytes(payload))
             rec["url"] = url
             rec["warc_ts"] = ts
             rows.append(rec)
-        yield pd.DataFrame(rows, columns=[
-            "url", "warc_ts", "doc_kind", "markdown", "extracted_text",
-            "digest", "n_pages", "n_headers", "n_blocks_kept",
-            "n_blocks_dropped", "image_tokens", "breadcrumb", "figures",
-            "error",
-        ])
+        yield pd.DataFrame(rows, columns=_OUT_COLUMNS)
 
 
 def extract_documents(docs_df: DataFrame, *, figured: bool = False,
@@ -171,18 +173,17 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
     # guide §2.4: don't pay an exchange the layout already provides
     if df.rdd.getNumPartitions() < n:
         df = df.repartition(n)
-    all_fields = [c for c, _ in _OUT_FIELDS]
     if columns is None:
-        out_columns = all_fields
+        out_columns = _OUT_COLUMNS
         schema = OUT_SCHEMA
     else:
         if not columns:
             raise ValueError("columns must name at least one output column")
-        unknown = set(columns) - set(all_fields)
+        unknown = set(columns) - set(_OUT_COLUMNS)
         if unknown:
             raise ValueError(f"unknown output columns: {sorted(unknown)}")
         keep = set(columns)
-        out_columns = [c for c in all_fields if c in keep]
+        out_columns = [c for c in _OUT_COLUMNS if c in keep]
         schema = ", ".join(f"{c} {t}" for c, t in _OUT_FIELDS if c in keep)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -199,17 +200,7 @@ def extract_documents(docs_df: DataFrame, *, figured: bool = False,
                 else:
                     payload = _bridge_html(doc_id, text)
                     url = f"https://docs.example.com/{doc_id}"
-                try:
-                    rec = _extract_one(url, payload)
-                except Exception as e:  # error channel, never fail the task
-                    rec = {
-                        "doc_kind": "unknown", "markdown": None,
-                        "extracted_text": None, "digest": None, "n_pages": 0,
-                        "n_headers": 0, "n_blocks_kept": 0,
-                        "n_blocks_dropped": 0, "image_tokens": 0,
-                        "breadcrumb": None, "figures": [],
-                        "error": f"{type(e).__name__}: {e}",
-                    }
+                rec = _extract_record(url, payload)
                 rec["url"] = url
                 rec["warc_ts"] = EPOCH + _dt.timedelta(seconds=doc_id)
                 for c in out_columns:

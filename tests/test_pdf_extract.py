@@ -794,3 +794,68 @@ def test_aes_core_matches_fips197():
     data = b"stream content of non-block-multiple length.."
     assert _aes_cbc_decrypt(key, _aes_cbc_encrypt(key, bytes(16), data)) == data
     assert _aes_cbc_decrypt(key, b"short") == b""  # malformed, not fatal
+
+
+def _png_filter(rows: list[bytes], tag: int, bpp: int) -> bytes:
+    """Textbook PNG row filter (RFC 2083 §6), the encoder side of
+    ``_png_unpredict``: each row becomes its tag byte + filtered bytes."""
+    def paeth(a, b, c):
+        p = a + b - c
+        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+        return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+
+    out = bytearray()
+    prev = bytes(len(rows[0]))
+    for row in rows:
+        out.append(tag)
+        for i, x in enumerate(row):
+            left = row[i - bpp] if i >= bpp else 0
+            up = prev[i]
+            ul = prev[i - bpp] if i >= bpp else 0
+            pred = (0, left, up, (left + up) >> 1, paeth(left, up, ul))[tag]
+            out.append((x - pred) & 0xFF)
+        prev = row
+    return bytes(out)
+
+
+@pytest.mark.parametrize("colors", [1, 3])
+@pytest.mark.parametrize("tag", [0, 1, 2, 3, 4])
+def test_png_unpredict_reverses_every_filter_tag(tag, colors):
+    """Every PNG filter (None/Sub/Up/Average/Paeth) is reversed exactly at
+    one and three bytes per pixel; an unknown tag stops decoding and keeps
+    the rows decoded before it."""
+    import random
+
+    from qwen_ocr_spark.functions.pdfx import _png_unpredict
+    columns = 7
+    rng = random.Random(tag * 10 + colors)
+    rows = [bytes(rng.randrange(256) for _ in range(columns * colors))
+            for _ in range(5)]
+    filtered = _png_filter(rows, tag, colors)
+    assert _png_unpredict(filtered, columns, colors) == b"".join(rows)
+    trailing = bytes([5]) + bytes(columns * colors)
+    assert (_png_unpredict(filtered + trailing + filtered, columns, colors)
+            == b"".join(rows))
+
+
+def test_png_predictor_row_buffer_is_bounded_by_the_stream():
+    """/Columns comes from the untrusted PDF: a tiny predictored stream
+    claiming 50M columns must not allocate a 50 MB prior-row buffer, and
+    still decodes to the bytes it holds."""
+    import tracemalloc
+    import zlib
+
+    from qwen_ocr_spark.functions.pdfx import _stream_bytes
+    payload = b"BT /F1 12 Tf (alpha) Tj ET"
+    data = zlib.compress(b"\x02" + payload)
+    obj = (b"<< /Length %d /Filter /FlateDecode /DecodeParms "
+           b"<< /Predictor 12 /Columns 50000000 >> >>\nstream\n"
+           % len(data)) + data + b"\nendstream"
+    tracemalloc.start()
+    try:
+        out = _stream_bytes(obj)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert out == payload
+    assert peak < 1_000_000, f"peak {peak} bytes"
